@@ -291,13 +291,6 @@ def run_from_config(
     for f in frames[1:]:
         base = base.unionByName(f)
 
-    hosts_df = None
-    if compiled["host_rows"]:
-        hosts_df = spark.createDataFrame(
-            compiled["host_rows"],
-            "host_pattern string, service string, is_wildcard boolean, priority int",
-        )
-
     from pyspark.sql import functions as F
 
     def apply_transforms(df: DataFrame) -> DataFrame:
@@ -335,7 +328,7 @@ def run_from_config(
         run_id=run_id,
         batch_id=batch_id,
         rules=compiled["rules"],
-        lookup_hosts=hosts_df,
+        lookup_hosts=compiled["host_rows"] or None,
         transform_fn=apply_transforms if cfg.transforms else None,
         docker_replicas=compiled["docker_replicas"],
     )

@@ -57,6 +57,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = [
     "committed_batches",
     "compaction_state",
@@ -104,9 +106,9 @@ def append_commit_marker(
     EVERY marker writer (the streaming dedup/screen indexes, as-of
     state epochs, epoch pins) must go through here so the schema and
     path layout live in exactly one place."""
-    spark.createDataFrame([(batch_id,)], "batch_id long").write.mode(
-        "append"
-    ).parquet(os.path.join(index_dir, "_commits"))
+    local_frame(spark, [(batch_id,)], "batch_id long").write.mode("append").parquet(
+        os.path.join(index_dir, "_commits")
+    )
 
 
 def compaction_state(spark: SparkSession, index_dir: str) -> tuple[int, int]:
@@ -307,8 +309,8 @@ def _compact(
     if chaos is not None:
         chaos(new_epoch)
     # marker LAST — readers switch epochs only here
-    spark.createDataFrame(
-        [(new_epoch, new_covered)], "epoch long, covered long"
+    local_frame(
+        spark, [(new_epoch, new_covered)], "epoch long, covered long"
     ).write.mode("append").parquet(
         os.path.join(index_dir, "_compact_commits")
     )

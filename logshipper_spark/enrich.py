@@ -21,6 +21,8 @@ from fnmatch import fnmatchcase
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+HostRow = tuple[str, str, bool, int]  # (host_pattern, service, is_wildcard, priority)
+
 
 def _glob_to_like(pattern: str) -> str:
     """Translate a path.Match-style glob to a SQL LIKE pattern.
@@ -35,7 +37,7 @@ def _glob_to_like(pattern: str) -> str:
     )
 
 
-def resolve_expr(host: Column, lookup_rows: list[tuple[str, str, bool, int]]) -> Column:
+def resolve_expr(host: Column, lookup_rows: list[HostRow]) -> Column:
     """First-match-wins resolver expression over a small pattern list
     (reference: static.go:37-51 — exact map first, then wildcards in
     order). Returns NULL when nothing matches."""
@@ -62,7 +64,7 @@ def strip_replica_suffix(host: Column) -> Column:
     return F.regexp_replace(host, _REPLICA_SUFFIX, "")
 
 
-def _docker_stage(host: Column, rows: list[tuple[str, str, bool, int]]) -> Column:
+def _docker_stage(host: Column, rows: list[HostRow]) -> Column:
     """Chain stage mirroring the Docker resolver's name fallback
     (docker.go:29-46) without a Docker API: a host in compose-replica
     shape (``name[-_]N``) resolves through the static map under its
@@ -80,7 +82,7 @@ def _docker_stage(host: Column, rows: list[tuple[str, str, bool, int]]) -> Colum
 
 def resolve_services(
     df: DataFrame,
-    hosts_df: DataFrame,
+    hosts: DataFrame | list[HostRow],
     dst_col: str = "dst_service",
     src_col: str = "src_service",
     source_name_col: str = "source_name",
@@ -90,18 +92,20 @@ def resolve_services(
     enrich dst_service when set; backfill empty src_service from the
     source name (resolved if possible, else the raw source name).
 
-    ``hosts_df`` must be small (it is a config dimension); it is
-    collected once on the driver and compiled into a first-match
-    expression — the Spark analogue of shipping the resolver map.
+    ``hosts`` is the resolver map as rows, compiled into a first-match
+    expression — the Spark analogue of shipping the resolver map. A
+    (small) dimension DataFrame is accepted too and collected on the
+    driver here, one job per call; callers that resolve every batch
+    pass rows so no batch pays that collect.
 
     ``docker_replicas=True`` appends the Docker-resolver stage to the
     chain (reference config ``resolve.docker: true``): hosts the static
     map misses are retried with their replica suffix stripped
     (docker.go:29-46, J5).
     """
-    rows = [
+    rows = hosts if isinstance(hosts, list) else [
         (r["host_pattern"], r["service"], r["is_wildcard"], r["priority"])
-        for r in hosts_df.collect()
+        for r in hosts.collect()
     ]
     dst = F.col(dst_col)
     src = F.col(src_col)
@@ -152,7 +156,7 @@ def enrich_roles(
 
 def resolve_one(
     host: str,
-    lookup_rows: list[tuple[str, str, bool, int]],
+    lookup_rows: list[HostRow],
     docker_replicas: bool = False,
 ) -> str | None:
     """Driver-side single-value resolver (test oracle parity helper),

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 # (src, dst, operation, base_ms, std_ms, err_rate, weight)
 # reference: cmd/demo/main.go:24-55
 TOPOLOGY: list[tuple[str, str, str, float, float, float, int]] = [
@@ -264,25 +266,32 @@ def lookup_roles(spark: SparkSession) -> DataFrame:
             tier = tiers.get(tool, "free")
             sink_hint = "sink_tools" if role == "tool" else "sink_default"
             rows.append((role, tool, team, tier, sink_hint))
-    return spark.createDataFrame(
-        rows, "role string, tool string, team string, cost_tier string, sink_hint string"
+    return local_frame(
+        spark, rows,
+        "role string, tool string, team string, cost_tier string, sink_hint string",
     )
 
 
+# Host→service resolver rows (host_pattern, service, is_wildcard,
+# priority) with exact keys and wildcards (reference: config.yml
+# resolver map, internal/resolve/static.go). The pipeline compiles
+# these rows straight into its resolver expression.
+HOST_ROWS: list[tuple[str, str, bool, int]] = [
+    ("db", "db-service", False, 0),
+    ("db.internal", "db-service", False, 1),
+    ("redis", "redis-cache", False, 2),
+    ("*.redis.svc", "redis-cache", True, 3),
+    ("cache", "redis-cache", False, 4),
+    ("mailer", "mail-service", False, 5),
+    ("*.mail.svc", "mail-service", True, 6),
+]
+
+
 def lookup_hosts(spark: SparkSession) -> DataFrame:
-    """Host→service resolver dimension with exact keys and wildcards
-    (reference: config.yml resolver map, internal/resolve/static.go)."""
-    rows = [
-        ("db", "db-service", False, 0),
-        ("db.internal", "db-service", False, 1),
-        ("redis", "redis-cache", False, 2),
-        ("*.redis.svc", "redis-cache", True, 3),
-        ("cache", "redis-cache", False, 4),
-        ("mailer", "mail-service", False, 5),
-        ("*.mail.svc", "mail-service", True, 6),
-    ]
-    return spark.createDataFrame(
-        rows, "host_pattern string, service string, is_wildcard boolean, priority int"
+    """``HOST_ROWS`` as the resolver dimension table."""
+    return local_frame(
+        spark, HOST_ROWS,
+        "host_pattern string, service string, is_wildcard boolean, priority int",
     )
 
 

@@ -4,15 +4,17 @@ The reference wires bounded channels between stages (reference:
 internal/pipeline/pipeline.go:38-175). Here the stages are one
 declarative DataFrame chain: Catalyst fuses parse+transform+enrich into
 a single narrow whole-stage-codegen pass over the scan; the only wide
-boundaries are the aggregate shuffles. Fan-out writes share one cached
-intermediate (the reference's transform output channel).
+boundaries are the aggregate shuffles. The fan-out (the reference's
+transform output channel) is written in that same pass, partitioned by
+sink; counts and aggregates read the written files back.
 
 Exactly-once + lineage (north rule): every batch writes its sinks under
 ``batch_id=N`` directories (re-running a batch overwrites its own
-output — idempotent restart), and appends per-partition lineage rows
+output — idempotent restart), and commits per-partition lineage rows
 plus pipeline counters (mirroring the reference's Prometheus counters,
-internal/metrics/metrics.go:12-72) to a checkpoint table, committed
-last so a half-written batch is re-done on restart.
+internal/metrics/metrics.go:12-72) to a checkpoint table, last, so a
+half-written batch is re-done on restart. The lineage rows are built on
+the driver and written as one sorted file per batch.
 """
 
 from __future__ import annotations
@@ -35,6 +37,7 @@ from .schemas import (
     FORMAT_PLAIN,
     FORMAT_TEMPLATE,
 )
+from .session import local_frame
 
 KNOWN_FORMATS = [
     FORMAT_JSON, FORMAT_ECS, FORMAT_METRIC, FORMAT_TEMPLATE, FORMAT_PLAIN,
@@ -47,14 +50,16 @@ def normalize_and_enrich(
     transcripts: DataFrame,
     ingest_ts: str = DEFAULT_INGEST_TS,
     lookup_roles: DataFrame | None = None,
-    lookup_hosts: DataFrame | None = None,
+    lookup_hosts: DataFrame | list[enrich.HostRow] | None = None,
     skip_turn_rank: bool = False,
     docker_replicas: bool = True,
 ) -> DataFrame:
     """The narrow stage: parse the text column (role plays the
     reference's source name), broadcast-enrich on (role, tool), resolve
     dst/src services, and pin stable turn ordering (W11) with a
-    row_number over (conv_id, turn_idx).
+    row_number over (conv_id, turn_idx). ``lookup_hosts`` defaults to
+    ``gen.HOST_ROWS``; pass rows, not a DataFrame, to spare every call
+    a driver collect (see ``enrich.resolve_services``).
 
     ``skip_turn_rank=True`` keeps the chain fully narrow (no window
     shuffle) — required for the native streaming path, where arbitrary
@@ -68,7 +73,7 @@ def normalize_and_enrich(
     )
     enriched = enrich.resolve_services(
         enriched,
-        lookup_hosts if lookup_hosts is not None else gen.lookup_hosts(spark),
+        lookup_hosts if lookup_hosts is not None else gen.HOST_ROWS,
         docker_replicas=docker_replicas,  # reference config: resolve.docker
     )
     if skip_turn_rank:
@@ -77,12 +82,30 @@ def normalize_and_enrich(
     return enriched.withColumn("turn_rank", F.row_number().over(w))
 
 
-def _partition_counts(df: DataFrame, stage: str) -> DataFrame:
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count("*").alias("rows_out"))
-        .withColumn("stage", F.lit(stage))
+def _commit_lineage(
+    spark: SparkSession,
+    path: str,
+    run_id: str,
+    ingest_ts: str,
+    rows_in: int,
+    parts: list[tuple[str, int, int]],
+    counters: list[tuple[str, int]],
+) -> None:
+    """Write one batch's lineage: a row per ``(stage, partition_id,
+    rows_out)`` part, sorted, then a ``counters`` row per counter, in
+    order, as ONE driver-built frame — one task, one file, and the same
+    bytes when a replay commits the same rows."""
+    rows = [(run_id, stage, pid, rows_in, n, None, None) for stage, pid, n in sorted(parts)]
+    rows += [(run_id, "counters", -1, rows_in, None, k, v) for k, v in counters]
+    schema = (
+        "run_id string, stage string, partition_id int, rows_in long, "
+        "rows_out long, counter string, value long"
     )
+    # committed_at is the run's pinned ingestion clock, NOT wall clock:
+    # a replayed batch re-commits byte-identical lineage (determinism)
+    local_frame(spark, rows, schema).withColumn(
+        "committed_at", F.lit(ingest_ts).cast("timestamp")
+    ).coalesce(1).write.mode("overwrite").parquet(path)
 
 
 def run_batch(
@@ -96,7 +119,7 @@ def run_batch(
     write: bool = True,
     sink_write_mode: str = "single_pass",
     lookup_roles: DataFrame | None = None,
-    lookup_hosts: DataFrame | None = None,
+    lookup_hosts: DataFrame | list[enrich.HostRow] | None = None,
     transform_fn=None,
     docker_replicas: bool = True,
 ) -> dict:
@@ -125,6 +148,14 @@ def run_batch(
     Sink payload: the normalized event including the ``raw`` map but
     not the original source line (reference: NormalizedEvent,
     internal/event/event.go:24-38, carries Raw, not the raw text).
+
+    Lineage: one collect of the per-(partition, sink) row counts gives
+    both the per-sink totals (summed on the driver) and the ``sink:<name>``
+    lineage rows. The parse stage commits one row: the exact total under
+    ``partition_id=-1`` in ``single_pass`` (per-partition counts would
+    need a second scan), per-partition counts of the cached intermediate
+    in ``per_sink``. With the counter rows, all of it is written as one
+    sorted file under ``lineage/batch_id=N``, overwritten on replay.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     rules = rules or gen.routing_rules()
@@ -153,7 +184,6 @@ def run_batch(
         enriched = enriched.cache()  # one parse, N filtered sink writes (K3)
 
     routed = route.routed_rows(enriched, rules)
-    sink_rows: dict[str, int] = {}
 
     if single_pass:
         # THE pass: parse+enrich+route+write fused; observe() rides it
@@ -173,19 +203,19 @@ def run_batch(
     else:
         routed_for_agg = routed
 
-    # per-sink row counts AND per-sink per-partition lineage in ONE pass
-    # over the fan-out (read back from the written files in single_pass —
-    # a column-pruned footer-light scan, not a recompute)
+    # per-sink row counts AND per-sink per-partition lineage in ONE
+    # collect over the fan-out (read back from the written files in
+    # single_pass — a column-pruned footer-light scan, not a recompute)
     sink_part = (
         routed_for_agg.groupBy(
             F.spark_partition_id().alias("partition_id"), F.col("sink")
         )
         .agg(F.count("*").alias("rows_out"))
-        .withColumn("stage", F.concat(F.lit("sink:"), F.col("sink")))
-        .cache()
+        .collect()
     )
-    for r in sink_part.groupBy("sink").agg(F.sum("rows_out").alias("cnt")).collect():
-        sink_rows[r["sink"]] = int(r["cnt"])
+    sink_rows: dict[str, int] = {}
+    for r in sink_part:
+        sink_rows[r["sink"]] = sink_rows.get(r["sink"], 0) + r["rows_out"]
 
     # observe() metrics are available after the first action above
     metrics = obs.get
@@ -194,16 +224,6 @@ def run_batch(
     fmt_counts = {
         f: metrics[f"fmt_{f}"] for f in KNOWN_FORMATS if metrics[f"fmt_{f}"] > 0
     }
-
-    if single_pass:
-        # the write pass was the parse pass; per-partition parse lineage
-        # would need a second full scan, so commit the (exact) total
-        parse_lineage = spark.createDataFrame(
-            [(-1, rows_in, "parse")], "partition_id int, rows_out long, stage string"
-        ).select("partition_id", "rows_out", "stage")
-    else:
-        parse_lineage = _partition_counts(enriched, "parse")
-    lineage_parts = [parse_lineage, sink_part.select("partition_id", "rows_out", "stage")]
 
     counts = route.sink_counts(routed_for_agg, ts_col="ts", window_duration="1 minute")
     # edge aggregate input: with a catch-all sink (predicate 'true'),
@@ -226,47 +246,37 @@ def run_batch(
         edges.write.mode("overwrite").parquet(
             os.path.join(out_dir, "edge_agg", f"batch_id={batch_id}")
         )
-
-    # lineage + counters checkpoint rows, committed last (restart point)
-    counters = [
-        ("events_received_total", rows_in),
-        ("parse_errors_total", parse_errors),
-        *[(f"parse_total_{fmt}", n) for fmt, n in sorted(fmt_counts.items())],
-        *[(f"sink_rows_{sink}", n) for sink, n in sorted(sink_rows.items())],
-    ]
-    lineage = lineage_parts[0]
-    for part in lineage_parts[1:]:
-        lineage = lineage.unionByName(part)
-    lineage = lineage.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(batch_id).cast("long").alias("batch_id"),
-        "stage",
-        F.col("partition_id").cast("int"),
-        F.lit(rows_in).cast("long").alias("rows_in"),
-        F.col("rows_out").cast("long"),
-        F.lit(None).cast("string").alias("counter"),
-        F.lit(None).cast("long").alias("value"),
-        # the run's pinned ingestion clock, NOT wall clock: a replayed
-        # batch re-commits byte-identical lineage (determinism rule)
-        F.lit(ingest_ts).cast("timestamp").alias("committed_at"),
-    )
-    counter_df = spark.createDataFrame(
-        [(run_id, batch_id, "counters", -1, rows_in, None, k, int(v)) for k, v in counters],
-        "run_id string, batch_id long, stage string, partition_id int, "
-        "rows_in long, rows_out long, counter string, value long",
-    ).withColumn("committed_at", F.lit(ingest_ts).cast("timestamp"))
-    if write:
-        # one directory per batch, overwritten on replay: a crash after
-        # run_batch but before the streaming checkpoint commit replays
-        # the batch and re-commits identical lineage instead of
-        # double-appending counters. batch_id lives in the directory
-        # name (partition discovery restores it on read).
-        lineage.unionByName(counter_df).drop("batch_id").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, "lineage", f"batch_id={batch_id}"))
+        # lineage + counters checkpoint rows, committed last (restart
+        # point). One directory per batch, overwritten on replay: a
+        # crash after run_batch but before the streaming checkpoint
+        # commit replays the batch and re-commits identical lineage
+        # instead of double-appending counters. batch_id lives in the
+        # directory name (partition discovery restores it on read).
+        if single_pass:
+            parse_parts = [("parse", -1, rows_in)]
+        else:
+            parse_parts = [
+                ("parse", r["pid"], r["count"])
+                for r in enriched.groupBy(F.spark_partition_id().alias("pid"))
+                .count()
+                .collect()
+            ]
+        counters = [
+            ("events_received_total", rows_in),
+            ("parse_errors_total", parse_errors),
+            *[(f"parse_total_{fmt}", n) for fmt, n in sorted(fmt_counts.items())],
+            *[(f"sink_rows_{sink}", n) for sink, n in sorted(sink_rows.items())],
+        ]
+        _commit_lineage(
+            spark,
+            os.path.join(out_dir, "lineage", f"batch_id={batch_id}"),
+            run_id, ingest_ts, rows_in,
+            parse_parts
+            + [(f"sink:{r['sink']}", r["partition_id"], r["rows_out"]) for r in sink_part],
+            counters,
+        )
 
     elapsed = time.time() - t0
-    sink_part.unpersist()
     if not single_pass:
         enriched.unpersist()
     return {

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from . import gen, pipeline, route
 from .schemas import DEFAULT_INGEST_TS, TRANSCRIPT_SCHEMA
+from .session import local_frame
 
 
 def _stream_key(path: str) -> str:
@@ -96,9 +97,9 @@ def _claim_stream_dir(
             )
         if owner is not None:
             return run_id
-    spark.createDataFrame([(run_id,)], "run_id string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(marker)
+    local_frame(spark, [(run_id,)], "run_id string").write.mode("overwrite").parquet(
+        marker
+    )
     return run_id
 
 
@@ -156,13 +157,14 @@ def run_stream(
         digest = hashlib.sha256(_stream_key(checkpoint_dir).encode()).hexdigest()
         run_id = f"stream-{digest[:12]}"
     rules = rules or gen.routing_rules()
-    # per-run constants built ONCE, not per micro-batch: the lookup
-    # dims (and their driver-side collects inside resolve_services)
-    # and the committed-batch set (one lineage scan at start; this
-    # process is the only lineage writer afterwards, so the local set
-    # stays exact and each epoch costs zero extra driver jobs)
+    # per-run constants built ONCE, not per micro-batch: the roles
+    # dimension, the resolver's host rows (rows, not a table, so no
+    # epoch collects them) and the committed-batch set (one lineage
+    # scan at start; this process is the only lineage writer
+    # afterwards, so the local set stays exact and each epoch costs
+    # zero extra driver jobs)
     lookup_roles = gen.lookup_roles(spark)
-    lookup_hosts = gen.lookup_hosts(spark)
+    lookup_hosts = gen.HOST_ROWS
     runs = pipeline.lineage_runs(spark, out_dir)
     foreign = sorted(set(runs) - {run_id})
     if foreign:
@@ -697,7 +699,7 @@ def streaming_substr_screen(
                     spark, index_dir, committed=committed, state=comp_state
                 )
             else:
-                idx = spark.createDataFrame([], "gram_hash long")
+                idx = local_frame(spark, [], "gram_hash long")
             # contamination vs the index AND the batch itself (the
             # siblings' rule (b)): a fingerprint counts as seen for
             # doc a when the index holds it OR a LOWER-id doc in this
@@ -952,8 +954,8 @@ def streaming_asof_enrich(
             }
         else:
             pinned = committed_batches(spark, state_dir)
-            spark.createDataFrame(
-                [(b,) for b in sorted(pinned)] or [], "state_batch_id long"
+            local_frame(
+                spark, [(b,) for b in sorted(pinned)], "state_batch_id long"
             ).coalesce(1).write.mode("overwrite").parquet(pin_path)
             # pin marker LAST — a crash mid-pin-write is invisible
             append_commit_marker(spark, pins_dir, batch_id)
@@ -968,7 +970,7 @@ def streaming_asof_enrich(
             # (CLAUDE.md gotcha) — select the declared fields only
             state = state.select(*state_fields)
         else:
-            state = spark.createDataFrame([], state_schema)
+            state = local_frame(spark, [], state_schema)
         enriched = temporal.asof_join(
             batch_df,
             state,
